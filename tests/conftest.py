@@ -22,3 +22,15 @@ def tiny(spark):
         "expected_clusters": spark.createDataFrame(data["expected_clusters"]).cache(),
         "pandas": data,
     }
+
+
+@pytest.fixture
+def no_shingle_kernel(monkeypatch):
+    """Make the standalone shingle kernel raise: pair scoring must read the
+    shingle hashes the signature kernel stored, not re-shingle pair sides."""
+    import translink.signatures
+
+    def _raise(*args, **kwargs):
+        raise AssertionError("pair scoring must read the stored shingle hashes")
+
+    monkeypatch.setattr(translink.signatures, "make_shingle_udf", _raise)

@@ -145,3 +145,22 @@ def test_lsh_bands_zero_raises_diagnostic():
 
     with _pytest.raises(ValueError, match="lsh_bands"):
         LinkConfig(lsh_bands=0).validate()
+
+
+def test_default_driver_memory_fits_the_host(monkeypatch):
+    """Without TRANSLINK_DRIVER_MEM the local driver heap is sized from the
+    host and never exceeds MemTotal; the override still wins."""
+    from translink.session import driver_memory
+
+    monkeypatch.delenv("TRANSLINK_DRIVER_MEM", raising=False)
+    default = driver_memory()
+    assert default.endswith("m")
+    try:
+        with open("/proc/meminfo") as fh:
+            total_kb = next(int(line.split()[1]) for line in fh
+                            if line.startswith("MemTotal:"))
+    except OSError:
+        pytest.skip("no /proc/meminfo")
+    assert 0 < int(default[:-1]) * 1024 <= total_kb
+    monkeypatch.setenv("TRANSLINK_DRIVER_MEM", "3g")
+    assert driver_memory() == "3g"

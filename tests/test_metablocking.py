@@ -248,6 +248,46 @@ def test_pipeline_meta_lane_keeps_f1(spark, tiny):
     assert prf["f1"] >= 0.99
 
 
+def test_budgeted_meta_lane_builds_key_table_once(spark, tiny, monkeypatch):
+    """With pair_budget and use_meta_lane both set, the pipeline builds the
+    purged shingle key table once and feeds it to the budget forecast and
+    the lane alike; the meta forecast still equals the lane's actual join
+    volume (sum of common_keys over its weighted pairs)."""
+    import translink.blocking as blocking
+    import translink.metablocking as metablocking
+    from translink.evaluate import pairwise_prf
+    from translink.pipeline import run_pipeline
+
+    seen = {"key_builds": 0}
+    real_keys = metablocking.shingle_block_keys
+    real_pairs = metablocking.meta_block_pairs
+    real_enforce = blocking.enforce_pair_budget
+
+    def counting_keys(*args, **kwargs):
+        seen["key_builds"] += 1
+        return real_keys(*args, **kwargs)
+
+    def measured_pairs(keys, cfg):
+        w = real_pairs(keys, cfg)
+        seen["actual"] = w.agg(F.sum("common_keys")).first()[0]
+        return w
+
+    def recorded_enforce(forecasts, budget):
+        rows = real_enforce(forecasts, budget)
+        seen["forecast"] = {r["lane"]: r["join_pairs"] for r in rows}
+        return rows
+
+    monkeypatch.setattr(metablocking, "shingle_block_keys", counting_keys)
+    monkeypatch.setattr(metablocking, "meta_block_pairs", measured_pairs)
+    monkeypatch.setattr(blocking, "enforce_pair_budget", recorded_enforce)
+
+    cfg = LinkConfig(use_meta_lane=True, pair_budget=10**9)
+    res = run_pipeline(spark, tiny["transcripts"], cfg)
+    assert seen["key_builds"] == 1
+    assert seen["forecast"]["meta"] == seen["actual"] > 0
+    assert pairwise_prf(tiny["labeled_pairs"], res["clusters"])["f1"] >= 0.99
+
+
 def test_link_meta_mutual_best_matches_truth(spark, tiny):
     """Schema-free linkage end to end: bipartite meta weights resolved by
     greedy mutual-best must assign (almost) every planted twin to its own

@@ -26,10 +26,29 @@ def test_end_to_end_f1(spark, tiny):
     assert prf["recall"] >= 0.99, prf
 
 
-def test_expected_clusters_golden(spark, tiny):
+def test_expected_clusters_golden(spark, tiny, no_shingle_kernel):
     """Cluster partition must equal the planted partition exactly (golden
-    assert, analog of group-structure asserts in tests/pipeline_test.rs:61-83)."""
+    assert, analog of group-structure asserts in tests/pipeline_test.rs:61-83).
+
+    The shingle kernel is disabled: scoring reads the ``shingle_hashes`` the
+    signed stage stored, and nothing re-shingles a pair side. The cascade's
+    edges must equal full scoring of every candidate pair (no cascade, the
+    JVM shingle expression instead of the stored hashes), thresholded."""
+    from translink.scoring import edges, score_pairs
+
     result = run_pipeline(spark, tiny["transcripts"], CFG)
+    text = result["signed"].select("conv_id", "canon_text")
+    full = score_pairs(
+        result["pairs"]
+        .join(text.withColumnRenamed("conv_id", "conv_id_a")
+              .withColumnRenamed("canon_text", "canon_text_a"), "conv_id_a")
+        .join(text.withColumnRenamed("conv_id", "conv_id_b")
+              .withColumnRenamed("canon_text", "canon_text_b"), "conv_id_b"),
+        CFG, cascade=False,
+    )
+    want = {(r["src"], r["dst"]) for r in edges(full, CFG).collect()}
+    got_edges = {(r["src"], r["dst"]) for r in edges(result["scored"], CFG).collect()}
+    assert want and got_edges == want
     got = result["clusters"]
     expected = tiny["expected_clusters"]
     # compare as partitions: same members <-> same cluster label sets

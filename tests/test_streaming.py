@@ -99,6 +99,42 @@ def test_split_conversation_repaired_at_read(spark, tiny, tmp_path):
     assert streamed["n_turns"] == batch["n_turns"]
 
 
+def test_store_written_with_sketch_column_still_reads(spark, tiny, tmp_path):
+    """A signature store written before the sketch column was dropped (its
+    files carry ``minhash_sketch``) still reads, including a split
+    conversation whose repaired row lacks that column."""
+    from translink.canonicalize import canonicalize
+    from translink.signatures import with_exact_digest, with_minhash
+
+    store = str(tmp_path / "old_store")
+    cfg = LinkConfig()
+    t = tiny["transcripts"]
+    victim = "conv_000000"
+    split = (F.col("conv_id") == victim) & (F.col("turn_idx") >= 2)
+    drops = [
+        t.filter(F.col("conv_id").isin(victim, "conv_000001") & ~split),
+        t.filter(split),
+    ]
+    for b, turns in enumerate(drops):
+        stamp = F.lit(b).cast("long")
+        turns.withColumn("_batch_id", stamp) \
+            .write.mode("append").parquet(os.path.join(store, "turns"))
+        (
+            with_minhash(with_exact_digest(canonicalize(turns, cfg)), cfg)
+            .withColumn("minhash_sketch", F.array(F.lit(0).cast("long")))
+            .withColumn("_batch_id", stamp)
+            .write.mode("append").parquet(os.path.join(store, "signatures"))
+        )
+
+    got = {r["conv_id"]: r for r in read_signature_store(spark, store, cfg).collect()}
+    assert sorted(got) == [victim, "conv_000001"]
+    batch = with_exact_digest(
+        canonicalize(t.filter(F.col("conv_id") == victim), cfg)
+    ).first()
+    assert got[victim]["digest_md5"] == batch["digest_md5"]
+    assert all(r["shingle_hashes"] for r in got.values())
+
+
 def test_same_batch_duplicate_turn_slot_matches_batch(spark, tiny, tmp_path):
     """A drop that ships TWO rows for one (conv_id, turn_idx) slot (a
     malformed-but-real producer case) must read back exactly as a batch run
@@ -195,9 +231,12 @@ def test_replacement_redelivery_drops_deleted_turns(spark, tmp_path):
     assert got_m["digest_md5"] == digest_of(original.filter("conv_id = 'A'"), cfg_m)
 
 
-def test_incremental_recluster_matches_batch(spark, tiny, tmp_path):
+def test_incremental_recluster_matches_batch(spark, tiny, tmp_path,
+                                             no_shingle_kernel):
     """Two drops + affected-component re-clustering == one-shot batch
-    clustering over the merged corpus (byte-identical labels)."""
+    clustering over the merged corpus (byte-identical labels). Both paths
+    score pairs from the stored shingle hashes: the shingle kernel is
+    disabled."""
     from translink.canonicalize import canonicalize
     from translink.clustering import (
         clusters_with_singletons, connected_components, exact_edges,

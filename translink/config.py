@@ -133,11 +133,6 @@ class LinkConfig:
                 f"num_hashes ({self.num_hashes}) must be a positive multiple "
                 f"of lsh_bands ({self.lsh_bands})"
             )
-        if self.num_hashes % 8:
-            raise ValueError(
-                f"num_hashes ({self.num_hashes}) must be a multiple of 8 "
-                f"(byte-lane sketch packs 8 components per long)"
-            )
         if self.max_block_size < 2:
             raise ValueError("max_block_size must be >= 2 (blocks of 1 pair nothing)")
         if self.shingle_size < 1:
@@ -167,10 +162,11 @@ class LinkConfig:
         return self
 
     #: Engine schema/semantics version — bump whenever a stage's output
-    #: schema or signature family changes (e.g. 2: minhash_sketch replaced
-    #: minhash_tagged). Folded into the checkpoint fingerprint so a resume
-    #: NEVER reads a stage written by an incompatible engine version.
-    ENGINE_VERSION = 2
+    #: schema or signature family changes (e.g. 3: the signed stage carries
+    #: shingle_hashes and no longer minhash_sketch). Folded into the
+    #: checkpoint fingerprint so a resume NEVER reads a stage written by an
+    #: incompatible engine version.
+    ENGINE_VERSION = 3
 
     def fingerprint(self) -> str:
         """Deterministic digest of the config + engine version — part of

@@ -11,11 +11,12 @@ Stage graph::
 
     transcripts
       └─ canonicalize            (1 shuffle: groupBy conv_id)
-           └─ signatures          (map-only: digests + minhash)
+           └─ signatures          (map-only: digests + shingle hashes + minhash)
                 ├─ exact edges    (1 shuffle: window over digest)   ─┐
                 ├─ attribute blocking + salt + self-join pairs       ├─ edges
                 └─ LSH band keys + salted band self-join pairs      ─┘
-                     └─ scoring   (JVM sims + Arrow JW)  → threshold
+                     └─ scoring   (stored-shingle jaccard → JVM lev → Arrow JW)
+                                  → threshold
                           └─ connected components (iterative, ~2 shuffles/round)
                                └─ clusters (+ singletons) → report
 """
@@ -34,7 +35,7 @@ from translink.clustering import clusters_by_contraction
 from translink.config import LinkConfig
 from translink.report import elect_primary
 from translink.scoring import edges as threshold_edges
-from translink.scoring import score_pairs
+from translink.scoring import score_pairs, with_pair_payload
 from translink.signatures import with_exact_digest, with_minhash
 
 #: Ordered stage names — checkpoint identities in the catalog manifest.
@@ -107,13 +108,12 @@ def _run_stages(transcripts, cfg, _stage, timings, cat) -> dict:
         "signed",
         # repartition: signature cost is per-row CPU; spread it over the
         # session's full parallelism regardless of upstream byte sizes.
-        # shingle_hashes are NOT computed/transferred here: the corpus-wide
-        # column would be ~10x the minhash over the Arrow channel and is
-        # only needed for prefilter survivors, for whom the scored stage
-        # recomputes it (a few k rows, not the corpus)
+        # shingle_hashes stay in the output: the kernel computes them for
+        # the minhash anyway, and the scored stage's exact jaccard reads
+        # them instead of re-shingling every pair side
         lambda: with_minhash(
             with_exact_digest(canonical), cfg,
-            repartition=cfg.shuffle_partitions, include_shingles=False,
+            repartition=cfg.shuffle_partitions,
         ),
     )
 
@@ -138,6 +138,20 @@ def _run_stages(transcripts, cfg, _stage, timings, cat) -> dict:
         lsh_pairs = lsh_candidate_pairs(
             bands, signed, cfg, payload_cols=["digest"]
         ).drop("n_bands_hit")
+        meta_keys = None
+        if cfg.use_meta_lane:
+            from translink.metablocking import (
+                filter_blocks, purge_blocks, shingle_block_keys,
+            )
+
+            # the purged key table feeds the budget forecast and the meta
+            # lane, whose meta_block_pairs reads it three times (per-node
+            # key counts + both sides of the self-join): checkpoint it once
+            # so the canonicalize/shingle/explode lineage runs a single time
+            # (q_cluster_graph_stats discipline)
+            meta_keys = purge_blocks(
+                filter_blocks(shingle_block_keys(signed, cfg), cfg), cfg
+            ).localCheckpoint(eager=True)
         if cfg.pair_budget is not None:
             # Pre-flight backpressure (T4 analog): price every lane's exact
             # self-join fan-out from block sizes alone and refuse to start
@@ -155,18 +169,8 @@ def _run_stages(transcripts, cfg, _stage, timings, cat) -> dict:
                     ["band_id", "band_hash", "salt"], "lsh",
                 ),
             ]
-            if cfg.use_meta_lane:
-                from translink.metablocking import (
-                    filter_blocks, purge_blocks, shingle_block_keys,
-                )
-
-                lanes_fc.append(volume_forecast(
-                    purge_blocks(
-                        filter_blocks(shingle_block_keys(signed, cfg), cfg),
-                        cfg,
-                    ),
-                    ["key"], "meta",
-                ))
+            if meta_keys is not None:
+                lanes_fc.append(volume_forecast(meta_keys, ["key"], "meta"))
             enforce_pair_budget(lanes_fc, cfg.pair_budget)
         # One row per distinct pair from either blocker; pairs already equal
         # by digest are resolved on the exact path — exclude them from
@@ -181,26 +185,16 @@ def _run_stages(transcripts, cfg, _stage, timings, cat) -> dict:
         # 8-byte digest (folded to one boolean map-side) does.
         pair_cols = ["conv_id_a", "conv_id_b", "digest_a", "digest_b"]
         lanes = [attr_pairs.select(*pair_cols), lsh_pairs.select(*pair_cols)]
-        if cfg.use_meta_lane:
+        if meta_keys is not None:
             # Opt-in lane 3: CNP-pruned shingle meta-blocking graph
             # (translink/metablocking.py) — recall insurance for pairs all
             # of whose MinHash bands miss (P[miss] is nonzero at any
             # band/row setting). The lane ships only ids + an 8-byte
             # digest into the union; payloads join downstream like every
             # other lane's survivors.
-            from translink.metablocking import (
-                cnp_prune, filter_blocks, meta_block_pairs, purge_blocks,
-                shingle_block_keys,
-            )
+            from translink.metablocking import cnp_prune, meta_block_pairs
 
-            # meta_block_pairs consumes the purged key table three times
-            # (per-node key counts + both sides of the self-join):
-            # checkpoint it once so the canonicalize/shingle/explode
-            # lineage runs a single time (q_cluster_graph_stats discipline)
-            keys = purge_blocks(
-                filter_blocks(shingle_block_keys(signed, cfg), cfg), cfg
-            ).localCheckpoint(eager=True)
-            meta = cnp_prune(meta_block_pairs(keys, cfg), cfg)
+            meta = cnp_prune(meta_block_pairs(meta_keys, cfg), cfg)
             dig = signed.select("conv_id", "digest")
             meta_pairs = (
                 meta.select("conv_id_a", "conv_id_b")
@@ -239,82 +233,15 @@ def _run_stages(transcripts, cfg, _stage, timings, cat) -> dict:
     pairs = _stage("pairs", _build_pairs)
 
     def _build_scored() -> DataFrame:
-        # Pair-side similarity runs as a three-step cascade (P1, cheap to
-        # expensive), and the JOINS follow the cascade too — the full text /
-        # shingle payload only ever shuffles for prefilter survivors:
-        #   1. MinHash-estimated jaccard on position-tagged signatures
-        #      (native array_intersect on 64-long arrays — no per-pair
-        #      lambdas) with a conservative margin below the exact bound;
-        #      kills ~99% of candidate pairs with a 0.5KB/side payload;
-        #   2. exact jaccard on hashed shingles (long-array set ops);
-        #   3. Levenshtein + Jaro-Winkler only for remaining survivors.
-        from translink.scoring import jaccard_lower_bound
-
-        # minhash_sketch packs one byte per position-scrambled signature
-        # component (8 lanes per long): per-pair agreement = zero bytes of
-        # the lane-wise XOR, counted with flat codegen arithmetic — no
-        # array allocation, and 64 bytes per side through the join instead
-        # of the 528-byte tagged array (the est join is the pipeline's
-        # biggest shuffle; minhash values are incompressible, so bytes here
-        # are pure memory/network bandwidth). A non-matching component
-        # falsely agrees with p=1/256 per lane, so the sketch estimate is
-        # >= the positional estimate: the prefilter only ever passes MORE
-        # pairs — the thresholded edge set is unchanged.
-        sk = signed.select("conv_id", F.col("minhash_sketch").alias("_sk"))
-        k = cfg.num_hashes
-        agree_terms = []
-        for p in range(k // 8):
-            x = F.element_at("_sk_a", p + 1).bitwiseXOR(F.element_at("_sk_b", p + 1))
-            for j in range(8):
-                lane = F.shiftrightunsigned(x, 8 * j).bitwiseAND(F.lit(255))
-                agree_terms.append(F.when(lane == 0, 1).otherwise(0))
-        est = sum(agree_terms[1:], agree_terms[0]) / k
-        bound = jaccard_lower_bound(cfg)
-        # margin = 3 sigma of the k-sample MinHash estimate at its
-        # worst-case variance (sigma <= 0.5/sqrt(k), at j=0.5), SCALED
-        # with the configured signature length — a fixed margin is <1
-        # sigma at small valid k (e.g. k=8) and silently drops true
-        # pairs; pairs the scaled margin drops are (p > 0.997) below the
-        # exact bound anyway
-        margin = 1.5 / (k ** 0.5)
-        survivors = (
-            pairs
-            .join(sk.select(F.col("conv_id").alias("conv_id_a"),
-                            F.col("_sk").alias("_sk_a")), "conv_id_a")
-            .join(sk.select(F.col("conv_id").alias("conv_id_b"),
-                            F.col("_sk").alias("_sk_b")), "conv_id_b")
-            .filter(est >= max(0.0, bound - margin))
-            .select("conv_id_a", "conv_id_b")
-        )
-        # shingle hashes are recomputed per survivor pair side (a vanishing
-        # fraction of the corpus) instead of persisting/shuffling the
-        # corpus-wide shingle column
-        # shingle-only kernel: the full signature UDF also computes the
-        # k-permutation minhash + byte sketch per pair side only to throw
-        # them away (and ships them back over Arrow)
-        from translink.signatures import make_shingle_udf
-
-        sig = make_shingle_udf(cfg.shingle_size)
-        payload = signed.select("conv_id", "canon_text")
-        enriched = (
-            survivors
-            .join(
-                payload.select(
-                    F.col("conv_id").alias("conv_id_a"),
-                    F.col("canon_text").alias("canon_text_a"),
-                ),
-                "conv_id_a",
-            )
-            .join(
-                payload.select(
-                    F.col("conv_id").alias("conv_id_b"),
-                    F.col("canon_text").alias("canon_text_b"),
-                ),
-                "conv_id_b",
-            )
-            .withColumn("shingles_a", sig(F.col("canon_text_a")))
-            .withColumn("shingles_b", sig(F.col("canon_text_b")))
-        )
+        # Each pair side joins once to its conversation's text and stored
+        # shingle hashes; score_pairs then runs the cheap-to-expensive
+        # cascade (P1): exact jaccard on the shingle arrays, Levenshtein
+        # only for pairs that can still reach the threshold, Jaro-Winkler
+        # only for pairs that still can with a perfect JW. No prefilter
+        # sits in front of the jaccard step: every LSH pair shares a full
+        # band, so a MinHash-estimate filter passes most of them and costs
+        # more than the exact check it would guard.
+        enriched = with_pair_payload(pairs, signed)
         return score_pairs(enriched, cfg, cascade=True).select(
             "conv_id_a", "conv_id_b",
             "token_jaccard", "levenshtein_sim", "jaro_winkler", "score",

@@ -239,6 +239,23 @@ def jaccard_lower_bound(cfg: LinkConfig, include_jaro_winkler: bool = True) -> f
     return max(0.0, (cfg.threshold * w_sum - w_rest) / cfg.w_jaccard)
 
 
+def with_pair_payload(pairs: DataFrame, signed: DataFrame) -> DataFrame:
+    """Join each side of ``(conv_id_a, conv_id_b)`` pairs once to its
+    conversation's ``canon_text`` and stored ``shingle_hashes`` (the
+    signature kernel's output), under the column names ``score_pairs``
+    reads — the exact jaccard then never re-shingles a pair side."""
+    payload = signed.select("conv_id", "canon_text", "shingle_hashes")
+
+    def _side(side: str) -> DataFrame:
+        return payload.select(
+            F.col("conv_id").alias(f"conv_id_{side}"),
+            F.col("canon_text").alias(f"canon_text_{side}"),
+            F.col("shingle_hashes").alias(f"shingles_{side}"),
+        )
+
+    return pairs.join(_side("a"), "conv_id_a").join(_side("b"), "conv_id_b")
+
+
 def score_pairs(
     pairs: DataFrame,
     cfg: LinkConfig | None = None,

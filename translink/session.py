@@ -14,6 +14,26 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Upper bound of the default driver heap: measured G1 pathology at 48g
+#: (canonicalize 6.6s at 16-24g vs 45s at 48g on local[32]).
+_DRIVER_MEM_CAP_MB = 20 << 10
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for a local-mode session:
+    ``$TRANSLINK_DRIVER_MEM`` when set, else half of the host's physical
+    memory (MemTotal) capped at 20g. The other half stays with the Python
+    workers, the page cache (shuffle files) and the JVM's off-heap use; a
+    heap sized past the host is never backed and ends in the kernel's OOM
+    killer, not a Spark error."""
+    if "TRANSLINK_DRIVER_MEM" in os.environ:
+        return os.environ["TRANSLINK_DRIVER_MEM"]
+    try:
+        total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (AttributeError, ValueError, OSError):  # platform does not report it
+        return "4g"
+    return f"{min(_DRIVER_MEM_CAP_MB, total_mb // 2)}m"
+
 
 def get_spark(
     master: str | None = None,
@@ -35,11 +55,9 @@ def get_spark(
 
     conf = {
         # Local mode: driver JVM hosts all executor threads — size its heap
-        # for the core count (cluster mode ignores this in favour of
-        # spark-submit's --driver-memory/--executor-memory). Deliberately
-        # moderate: measured G1 pathology at 48g on this box (canonicalize
-        # 6.6s at 16-24g vs 45s at 48g on local[32]).
-        "spark.driver.memory": os.environ.get("TRANSLINK_DRIVER_MEM", "20g"),
+        # from the host (cluster mode ignores this in favour of
+        # spark-submit's --driver-memory/--executor-memory).
+        "spark.driver.memory": driver_memory(),
         # Shuffle files default to the system temp disk — measured FASTER
         # than tmpfs on this box (BENCH/BASELINE.md A/B: tmpfs shuffle
         # competes with the job for the saturated DRAM bus; the disk path

@@ -105,8 +105,8 @@ def _shingle_rows(texts, pat, C, n: int) -> list:
 
     The ONE implementation of the batch tokenize -> hash -> n-gram-combine
     -> dedup sequence (shared by the signature and shingle kernels): the
-    hash family feeding MinHash, LSH bands, and the scorer's recomputed
-    pair-side shingles must be bit-identical, so it must not be duplicated.
+    hash family feeding MinHash, LSH bands, and the scorer's exact Jaccard
+    must be bit-identical, so it must not be duplicated.
     Tokenizes with the compiled ``pat`` (C regex), hashes every token of
     the batch in one C-vectorized pass (pandas siphash, deterministic fixed
     key), combines n-grams numerically (s_i = C1*h_i + C2*h_{i+1} + ...,
@@ -186,14 +186,9 @@ def _minhash_matrix(rows, A, B, k: int) -> np.ndarray:
     return mh
 
 
-def make_signature_udf(k: int, n: int, seed: int = 42, emit_shingles: bool = True):
+def make_signature_udf(k: int, n: int, seed: int = 42):
     """Arrow-batched signature kernel: canonical text -> (shingle_hashes,
     minhash), vectorized across the batch.
-
-    ``emit_shingles=False`` drops shingle_hashes from the OUTPUT schema:
-    callers that only need the signatures (the pipeline's signed stage —
-    survivors recompute shingles pair-side) skip transferring hundreds of
-    longs per row back over Arrow, a pure memory-bandwidth saving.
 
     Everything per-token/per-shingle happens here, NOT in SQL expressions:
     even a single-level ``transform(tokens, t -> xxhash64(t))`` runs
@@ -213,39 +208,18 @@ def make_signature_udf(k: int, n: int, seed: int = 42, emit_shingles: bool = Tru
 
     from pyspark.sql.types import StructField, StructType
 
-    fields = [
+    out_type = StructType([
+        StructField("shingle_hashes", ArrayType(LongType()), False),
         StructField("minhash", ArrayType(LongType()), False),
-        # byte-lane sketch: one byte per position-scrambled signature
-        # component, packed 8 per long (k/8 longs total). Two sketches'
-        # per-lane agreement estimates positional MinHash agreement with a
-        # +1/256 false-agreement bias per non-matching component — strictly
-        # CONSERVATIVE for prefiltering (only ever passes more pairs), at
-        # 1/8 the bytes of the full tagged signature and compared with pure
-        # codegen XOR + zero-byte counting instead of allocating array
-        # intersections.
-        StructField("minhash_sketch", ArrayType(LongType()), False),
-    ]
-    if emit_shingles:
-        fields.insert(0, StructField("shingle_hashes", ArrayType(LongType()), False))
-    out_type = StructType(fields)
-    TAG_A = np.int64(-8056529492539294021)  # odd multiplier
-    TAG_I = (np.arange(k, dtype=np.int64) + np.int64(1)) * np.int64(5871781006564002453)
+    ])
 
     @pandas_udf(out_type)
     def signature_kernel(texts: pd.Series) -> pd.DataFrame:
         rows_sh = _shingle_rows(texts, pat, C, n)
         mh = _minhash_matrix(rows_sh, A, B, k)
-        tagged = mh * TAG_A + TAG_I  # wraps mod 2^64; bijective per position
-        # pack the low byte of each position-scrambled component, 8 per long
-        lanes = (tagged.view(np.uint64) & np.uint64(0xFF)).reshape(len(mh), k // 8, 8)
-        shifts = np.uint64(8) * np.arange(8, dtype=np.uint64)
-        sketch = np.bitwise_or.reduce(lanes << shifts, axis=2).view(np.int64)
         # numpy arrays go straight to Arrow (list-of-ndarray fast path);
         # .tolist() boxing would cost more than the whole minhash computation
-        out = {"minhash": list(mh), "minhash_sketch": list(sketch)}
-        if emit_shingles:
-            out = {"shingle_hashes": rows_sh, **out}
-        return pd.DataFrame(out)
+        return pd.DataFrame({"shingle_hashes": rows_sh, "minhash": list(mh)})
 
     return signature_kernel
 
@@ -306,7 +280,6 @@ def with_minhash(
     cfg: LinkConfig | None = None,
     repartition: int | None = None,
     method: str = "arrow",
-    include_shingles: bool = True,
 ) -> DataFrame:
     """Add ``shingle_hashes: array<bigint>`` (each shingle xxhash64'd once)
     and ``minhash: array<bigint>`` signature columns.
@@ -332,15 +305,11 @@ def with_minhash(
         # k-permutation minhash all run in ONE numpy kernel per Arrow batch
         # (even single-level lambda expressions are interpreted JVM-side and
         # lose to the kernel ~30:1 at corpus scale; see PLANS.md)
-        sig = make_signature_udf(k, cfg.shingle_size,
-                                 emit_shingles=include_shingles)
-        out = canonical.withColumn("_sig", sig(F.col("canon_text")))
-        if include_shingles:
-            out = out.withColumn("shingle_hashes", F.col("_sig.shingle_hashes"))
+        sig = make_signature_udf(k, cfg.shingle_size)
         return (
-            out
+            canonical.withColumn("_sig", sig(F.col("canon_text")))
+            .withColumn("shingle_hashes", F.col("_sig.shingle_hashes"))
             .withColumn("minhash", F.col("_sig.minhash"))
-            .withColumn("minhash_sketch", F.col("_sig.minhash_sketch"))
             .drop("_sig")
         )
     base = (
@@ -357,32 +326,12 @@ def with_minhash(
         f"else transform(sequence(0, {k - 1}), "
         f"i -> array_min(transform(shingle_hashes, h -> xxhash64(h, i)))) end"
     )
-    base = base.withColumn("minhash", F.expr(expr))
-    # byte-lane sketch (flat codegen: 8 ORed byte extracts per output long)
-    sketch = F.array(*[
-        _fold_or([
-            F.shiftleft(
-                F.xxhash64(F.element_at("minhash", p * 8 + j + 1), F.lit(p * 8 + j))
-                .bitwiseAND(F.lit(255)),
-                8 * j,
-            )
-            for j in range(8)
-        ])
-        for p in range(k // 8)
-    ])
-    return base.withColumn("minhash_sketch", sketch)
-
-
-def _fold_or(cols):
-    out = cols[0]
-    for c in cols[1:]:
-        out = out.bitwiseOR(c)
-    return out
+    return base.withColumn("minhash", F.expr(expr))
 
 
 def minhash_jaccard_expr(a: str = "a.minhash", b: str = "b.minhash"):
     """Estimated Jaccard similarity from two MinHash signatures: fraction of
-    agreeing components. JVM expression; used to pre-filter LSH candidates."""
+    agreeing components. JVM expression."""
     return F.expr(
         f"size(filter(zip_with({a}, {b}, (x, y) -> x = y), v -> v)) / size({a})"
     )

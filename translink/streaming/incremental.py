@@ -179,7 +179,9 @@ def read_signature_store(
     repaired = with_minhash(
         with_exact_digest(canonicalize(merged_turns, cfg)), cfg
     )
-    return clean.unionByName(repaired)
+    # allowMissingColumns: a store written by an older engine still carries
+    # columns the current signature kernel no longer emits
+    return clean.unionByName(repaired, allowMissingColumns=True)
 
 
 def recluster_incremental(
@@ -217,8 +219,7 @@ def recluster_incremental(
     """
     from translink.blocking import lsh_band_keys, with_block_key
     from translink.clustering import connected_components
-    from translink.scoring import score_pairs
-    from translink.signatures import make_shingle_udf
+    from translink.scoring import score_pairs, with_pair_payload
 
     cfg = cfg or LinkConfig()
     new_signed = signed.join(new_ids, "conv_id", "left_semi")
@@ -287,24 +288,9 @@ def recluster_incremental(
         | (F.col("digest_md5_a") != F.col("digest_md5_b"))
     ).select("conv_id_a", "conv_id_b")
 
-    payload = signed.select("conv_id", "canon_text")
-    # shingle-only kernel: the full signature UDF would also compute the
-    # k-permutation minhash + byte sketch per pair side only to discard
-    # them (and ship them back over Arrow) — same fix as pipeline.py's
-    # scored stage
-    sig_udf = make_shingle_udf(cfg.shingle_size)
-    enriched = (
-        sim_pairs
-        .join(payload.select(F.col("conv_id").alias("conv_id_a"),
-                             F.col("canon_text").alias("canon_text_a")),
-              "conv_id_a")
-        .join(payload.select(F.col("conv_id").alias("conv_id_b"),
-                             F.col("canon_text").alias("canon_text_b")),
-              "conv_id_b")
-        .withColumn("shingles_a", sig_udf(F.col("canon_text_a")))
-        .withColumn("shingles_b", sig_udf(F.col("canon_text_b")))
-    )
-    scored = score_pairs(enriched, cfg, cascade=True)
+    # pair sides read the stored shingle hashes, as the batch scored stage
+    # does: same sets, same cascade
+    scored = score_pairs(with_pair_payload(sim_pairs, signed), cfg, cascade=True)
     sim_new_edges = scored.filter(F.col("score") >= cfg.threshold).select(
         F.col("conv_id_a").alias("src"), F.col("conv_id_b").alias("dst")
     )
